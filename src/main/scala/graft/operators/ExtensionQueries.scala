@@ -2158,9 +2158,10 @@ object ExtensionQueries {
         // r16 optimization (guide §2.4/§2.6): the 6 per-candidate plans
         // (6 scans, ~18 exchange stages, 25 AQE jobs measured) were
         // barrier-bound — 1.8 s wall on 6.8 s taskSum at sf0.1. The
-        // candidates now STACK per table (lhs/rhs canonicalized to
-        // STRING — injective for every candidate type, so distinctness
-        // and group identity are untouched) and union into ONE
+        // candidates now STACK per table (lhs canonicalized to BIGINT,
+        // rhs to a (BIGINT, STRING) pair — see `canon` below; injective
+        // for every candidate type, so distinctness and group identity
+        // are untouched) and union into ONE
         // arm-keyed rollup chain: 3 column-pruned scans, one
         // (arm, lhs, rhs) partial rollup, one (arm, lhs) rollup, one
         // |candidates|-row verdict rollup. Per-candidate numbers are

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's end-to-end batch ETL, Spark-first (ref:
   * build_database.py:227-253 `main()`; SURVEY.md §3 E1-E3):
@@ -12,9 +13,15 @@ import org.apache.spark.sql.functions._
   *
   * Inputs/outputs are paths + DataFrames; sinks are the caller's choice
   * (tests assert on DataFrames; `run` writes parquet tables). Every
-  * stage is lazy until a sink action — one QueryExecution per write,
-  * with Catalyst pushing the watermark filters into the CSV scans and
-  * broadcasting both dimension joins.
+  * stage is lazy until an action, with Catalyst pushing the watermark
+  * filters into the CSV scans and broadcasting both dimension joins.
+  * `run` executes these queries, each as one job per AQE query stage:
+  * the watermark maxima (which also materializes the sales feeds'
+  * parse-once checkpoint), the `max(saleID)`/row-count aggregate when
+  * `global_sales` already exists, then one write per table. Nothing
+  * `run` wrote is read back to be counted, and every read of an owned
+  * table or of the catalog declares its [[Schemas]] type, so no job
+  * infers a schema.
   */
 final class CocktailPipeline(
     barStockPath: String,
@@ -130,29 +137,41 @@ final class CocktailPipeline(
     * (README.md:20-22) — with saleIDs offset past the stored max so keys
     * stay unique across batches (the §8.5 fix; the reference restarts at
     * 0 and violates its own PK). Dimensions are snapshots: overwrite.
+    *
+    * Returns each table's stored row count after the run; for
+    * `global_sales` that is the rows stored before plus this batch, not
+    * the batch size.
     */
   def run(spark: SparkSession, warehouseDir: String): Map[String, Long] = {
     val stockDf = barStock(spark)
     val (salesDf, newWm) = sales(spark)
 
+    // a table this run writes, read back under its declared schema
+    def owned(name: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(s"$warehouseDir/$name")
+    // the row count comes from the write itself: an observed count(1)
+    // over the written rows, delivered with the write's own query — no
+    // second scan of the table. A fresh Observation per call: each one
+    // is bound to a single query.
     def save(name: String, df: DataFrame, mode: String = "overwrite"): Long = {
-      df.write.mode(mode).parquet(s"$warehouseDir/$name")
-      spark.read.parquet(s"$warehouseDir/$name").count()
+      val written = Observation()
+      df.observe(written, count(lit(1)).as("rows"))
+        .write.mode(mode).parquet(s"$warehouseDir/$name")
+      written.get("rows").asInstanceOf[Long]
     }
-    val salesPath = s"$warehouseDir/global_sales"
     // existence via the Hadoop FS API, not java.nio — the warehouse may
     // be hdfs:///s3a://, where a local-path check would silently say "no"
     // and restart saleIDs at 0 (the §8.5 PK violation this offset fixes)
-    val hPath = new org.apache.hadoop.fs.Path(salesPath)
+    val hPath = new org.apache.hadoop.fs.Path(s"$warehouseDir/global_sales")
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keyOffset =
-      if (fs.exists(hPath))
-        spark.read.parquet(salesPath).agg(max("saleID")).first().getAs[Any](0) match {
-          case null => 0L
-          case m: Long => m + 1
-        }
-      else 0L
-    val salesCount = save("global_sales",
+    // rows already stored and the next free saleID, in one aggregate
+    val (storedRows, keyOffset) =
+      if (fs.exists(hPath)) {
+        val r = owned("global_sales", Schemas.globalSales)
+          .agg(count(lit(1)), max("saleID")).first()
+        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1) + 1)
+      } else (0L, 0L)
+    val batchRows = save("global_sales",
       salesDf.withColumn("saleID", col("saleID") + keyOffset), "append")
     // advance watermarks IMMEDIATELY after the sales append commits: a
     // crash in the dimension/poc writes below must not leave old
@@ -161,17 +180,15 @@ final class CocktailPipeline(
     Watermarks.write(watermarkPath, newWm)
     // dim terms come from ALL stored sales, not just this batch — an
     // empty incremental batch must not shrink the cocktails snapshot
-    val allSales = spark.read.parquet(salesPath)
+    val allSales = owned("global_sales", Schemas.globalSales)
     val counts = Map(
       "bar_stock" -> save("bar_stock", stockDf),
-      "global_sales" -> salesCount,
+      "global_sales" -> (storedRows + batchRows),
       "cocktails" -> save("cocktails", cocktails(spark, allSales)))
     // poc reads the saved tables (CTAS-equivalent) so it sees all batches
-    val poc = pocAnalysis(
-      spark.read.parquet(salesPath),
-      spark.read.parquet(s"$warehouseDir/cocktails"),
-      spark.read.parquet(s"$warehouseDir/bar_stock"))
-    val pocCount = save("poc_analysis", poc)
-    counts + ("poc_analysis" -> pocCount)
+    val poc = pocAnalysis(allSales,
+      owned("cocktails", Schemas.cocktails),
+      owned("bar_stock", Schemas.barStock))
+    counts + ("poc_analysis" -> save("poc_analysis", poc))
   }
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /** The drink-enrichment source (ref: build_database.py:28-46 — GET
   * thecocktaildb.com/api/json/v1/1/search.php?s={term} per distinct
@@ -26,12 +27,16 @@ trait CocktailSource {
   * drinks and the same drink returned by many terms (dedup A4 collapses
   * those).
   *
+  * The catalog is read with the API field contract
+  * ([[Schemas.cocktailsApi]]), never inferred.
+  *
   * Scale note: terms come from a distinct() over the fact table — small
   * by construction — so they broadcast; the catalog scan never shuffles.
   */
 final class FixtureCocktailSource(fixturePath: String) extends CocktailSource {
   override def search(spark: SparkSession, terms: DataFrame): DataFrame = {
-    val catalog = spark.read.option("multiLine", "true").json(fixturePath)
+    val catalog = spark.read.schema(Schemas.cocktailsApi)
+      .option("multiLine", "true").json(fixturePath)
     catalog.join(
       broadcast(terms.select(lower(col("term")).as("term"))),
       contains(lower(col("strDrink")), col("term")))
@@ -145,10 +150,8 @@ object HttpCocktailSource {
     * frame — pure transformation, no HTTP.
     */
   def searchFrom(fetched: DataFrame): DataFrame = {
-    val respSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "drinks ARRAY<STRUCT<idDrink: STRING, strDrink: STRING, " +
-        "strCategory: STRING, strIBA: STRING, strAlcoholic: STRING, " +
-        "strGlass: STRING, dateModified: STRING>>")
+    val respSchema = StructType(Seq(
+      StructField("drinks", ArrayType(Schemas.cocktailsApi))))
     // explode (not _outer): null body / null drinks array -> zero rows
     fetched.select("term", "body")
       .select(col("term"),

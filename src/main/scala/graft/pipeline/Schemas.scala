@@ -5,7 +5,8 @@ import org.apache.spark.sql.types._
 /** Declared schemas for the cocktails-domain tables — the engine's
   * equivalent of the reference DDL (ref: database/data_tables.sql:5-31).
   * All reads declare these explicitly; no runtime inference in tested
-  * paths (SURVEY.md §1.2).
+  * paths (SURVEY.md §1.2). That includes `CocktailPipeline.run` reading
+  * back the tables it wrote and every reader of the drink catalog.
   */
 object Schemas {
 
@@ -55,4 +56,21 @@ object Schemas {
     StructField("strAlcoholic", StringType),
     StructField("strGlass", StringType),
     StructField("dateModified", TimestampType)))
+
+  /** The drink-catalog API's field contract (ref: build_database.py:28-46):
+    * the 7 projected fields plus `strInstructions`, a payload field that
+    * makes column pruning observable. All strings on the wire; typing is
+    * downstream (`CocktailSource.project`). The fixture reader, the HTTP
+    * response parser and the DSv2 `CocktailCatalogV2` source all read
+    * with it, so they cannot drift apart.
+    */
+  val cocktailsApi: StructType = StructType(Seq(
+    StructField("idDrink", StringType),
+    StructField("strDrink", StringType),
+    StructField("strCategory", StringType),
+    StructField("strIBA", StringType),
+    StructField("strAlcoholic", StringType),
+    StructField("strGlass", StringType),
+    StructField("strInstructions", StringType),
+    StructField("dateModified", StringType)))
 }

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
-import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
@@ -64,11 +63,4 @@ object Watermarks {
   def filterNewerThan(df: DataFrame, watermark: Option[String]): DataFrame =
     df.filter(col("dateOfSale") >
       lit(watermark.getOrElse(Epoch)).cast("timestamp"))
-
-  /** New watermark value for a filtered batch: max(dateOfSale), or None
-    * when the batch is empty (caller keeps the old value — §8.6 fix).
-    */
-  def batchMax(df: DataFrame): Option[String] =
-    Option(df.agg(max("dateOfSale")).first().getAs[Timestamp](0))
-      .map(_.toString.stripSuffix(".0"))
 }

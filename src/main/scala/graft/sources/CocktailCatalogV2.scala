@@ -5,6 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.pipeline.Schemas
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -20,7 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * build_database.py:28-46), expressed the way a production HTTP source
   * plugs into Catalyst:
   *
-  *   - declared schema (no inference) — the API's stable field contract;
+  *   - declared schema (no inference) — the API's stable field contract,
+  *     `Schemas.cocktailsApi`, shared with the pipeline's catalog readers;
   *   - column pruning pushdown: `ReadSchema` in the plan shows only what
   *     the query needs (the reference projects 7 of ~50 fields AFTER
   *     transfer; a DSv2 source never transfers them);
@@ -41,7 +43,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 class CocktailCatalogV2 extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CocktailCatalogV2.schema
+    Schemas.cocktailsApi
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
@@ -54,25 +56,11 @@ class CocktailCatalogV2 extends TableProvider {
   }
 }
 
-object CocktailCatalogV2 {
-  /** The API's field contract (projected subset + a payload field to make
-    * pruning observable). All strings on the wire; typing is downstream. */
-  val schema: StructType = StructType(Seq(
-    StructField("idDrink", StringType),
-    StructField("strDrink", StringType),
-    StructField("strCategory", StringType),
-    StructField("strIBA", StringType),
-    StructField("strAlcoholic", StringType),
-    StructField("strGlass", StringType),
-    StructField("strInstructions", StringType),
-    StructField("dateModified", StringType)))
-}
-
 class CocktailCatalogTable(path: String, partitions: Int)
     extends Table with SupportsRead {
   require(path != null, "option 'path' is required")
   override def name(): String = s"cocktail_catalog($path)"
-  override def schema(): StructType = CocktailCatalogV2.schema
+  override def schema(): StructType = Schemas.cocktailsApi
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -82,7 +70,7 @@ class CocktailCatalogTable(path: String, partitions: Int)
 class CocktailScanBuilder(path: String, partitions: Int)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
-  private var required: StructType = CocktailCatalogV2.schema
+  private var required: StructType = Schemas.cocktailsApi
   private var pushed: Array[Filter] = Array.empty
 
   /** A filter is absorbable iff the "API" can answer it: name searches. */

@@ -2,13 +2,19 @@ package graft.pipeline
 
 import java.nio.file.Files
 import java.sql.Date
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end reference-parity pipeline test: golden poc_analysis rows,
-  * dirty-data cleaning, fuzzy-search enrichment + keep-newest dedup, and
-  * the incremental-watermark contract (README.md:20-22: a second run with
-  * advanced watermarks inserts zero sales rows).
+  * dirty-data cleaning, fuzzy-search enrichment + keep-newest dedup, the
+  * incremental-watermark contract (README.md:20-22: a second run with
+  * advanced watermarks inserts zero sales rows), and the sink contract:
+  * `run` returns stored row counts without reading its tables back.
   */
 class CocktailPipelineSpec extends SparkSpec {
 
@@ -17,6 +23,15 @@ class CocktailPipelineSpec extends SparkSpec {
     val paths = Fixtures.writeAll(dir)
     val pipe = Fixtures.pipeline(dir, paths)
     (dir, paths, pipe)
+  }
+
+  /** `run` returns every table's stored row count, as a read-back would. */
+  private def assertStoredCounts(warehouse: String, counts: Map[String, Long]): Unit = {
+    val tables = Seq("bar_stock", "global_sales", "cocktails", "poc_analysis")
+    assert(counts.keySet == tables.toSet)
+    tables.foreach { t =>
+      assert(counts(t) == spark.read.parquet(s"$warehouse/$t").count(), t)
+    }
   }
 
   test("full run produces the golden poc_analysis") {
@@ -73,15 +88,16 @@ class CocktailPipelineSpec extends SparkSpec {
 
   test("second run with advanced watermarks inserts zero sales rows (incremental contract)") {
     val (dir, paths, pipe) = freshRun()
-    pipe.run(spark, s"$dir/warehouse")
+    assertStoredCounts(s"$dir/warehouse", pipe.run(spark, s"$dir/warehouse"))
     val wmAfterFirst = Watermarks.read(paths("watermarks"))
     assert(wmAfterFirst("BUDA_date_max") == "2020-12-27 12:00:00")
     assert(wmAfterFirst("LON_date_max") == "2020-12-26 13:05:00")
     assert(wmAfterFirst("NYC_date_max") == "2020-12-28 09:31:00")
 
     val counts2 = pipe.run(spark, s"$dir/warehouse")
-    assert(counts2("global_sales") == 8) // unchanged: nothing newer
+    assert(counts2("global_sales") == 8) // unchanged: nothing newer (observed batch of 0)
     assert(counts2("cocktails") == 3)    // dim snapshot not shrunk by empty batch
+    assertStoredCounts(s"$dir/warehouse", counts2)
     // watermarks unchanged (no non-empty batch to advance them)
     assert(Watermarks.read(paths("watermarks")) == wmAfterFirst)
   }
@@ -120,9 +136,55 @@ class CocktailPipelineSpec extends SparkSpec {
     // rewind one city's watermark so the second run re-loads its rows
     val wm = Watermarks.read(paths("watermarks"))
     Watermarks.write(paths("watermarks"), wm.updated("LON_date_max", Watermarks.Epoch))
-    pipe.run(spark, s"$dir/warehouse")
+    val counts = pipe.run(spark, s"$dir/warehouse")
+    // the stored total (8 + 2 re-loaded london rows), not the batch size
+    assert(counts("global_sales") == 10)
+    assertStoredCounts(s"$dir/warehouse", counts)
     val sales = spark.read.parquet(s"$dir/warehouse/global_sales")
-    assert(sales.count() == 10) // 8 + 2 re-loaded london rows
+    assert(sales.count() == 10)
     assert(sales.select("saleID").distinct().count() == 10) // keys unique across batches
+  }
+
+  test("the declared schemas are what run writes (owned tables are read with them)") {
+    val (dir, _, pipe) = freshRun()
+    pipe.run(spark, s"$dir/warehouse")
+    def nullable(s: StructType) = StructType(s.fields.map(_.copy(nullable = true)))
+    Seq("global_sales" -> Schemas.globalSales, "bar_stock" -> Schemas.barStock,
+        "cocktails" -> Schemas.cocktails).foreach { case (t, declared) =>
+      assert(spark.read.parquet(s"$dir/warehouse/$t").schema == nullable(declared), t)
+    }
+  }
+
+  test("a fresh run reads no written table back and infers no schema") {
+    val (dir, _, pipe) = freshRun()
+    val sc = spark.sparkContext
+    val runGroup = s"pipeline-spec-run-${java.util.UUID.randomUUID()}"
+    val markerGroup = s"$runGroup-marker"
+    val stageNames = new ConcurrentLinkedQueue[String]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`runGroup`) => e.stageInfos.foreach(s => stageNames.add(s.name))
+          case Some(`markerGroup`) => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(runGroup, "pipeline run")
+      try pipe.run(spark, s"$dir/warehouse") finally sc.clearJobGroup()
+      // events arrive in order: once the marker job is seen, every job
+      // of the run has been seen too
+      sc.setJobGroup(markerGroup, "listener marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val names = stageNames.asScala.toSeq
+    assert(names.nonEmpty)
+    // schema inference and a read-back's footer job run on the caller's
+    // thread and carry the reader's call site
+    assert(!names.exists(n => n.startsWith("parquet at") || n.startsWith("json at")),
+      names.distinct.mkString("; "))
   }
 }
